@@ -253,6 +253,28 @@ def test_fresh_engine_reads_are_empty_not_errors(spark, tmp_path):
     assert eng.schemas_list() == []
 
 
+def test_engine_on_uri_base_dir_sees_its_stores(spark, tmp_path):
+    """A base_dir given as a URI (``file://``, and likewise ``s3a://``)
+    resolves store existence through the Hadoop FileSystem: tier1/tier2
+    reads see what was written, and each suppress keeps the rules the
+    previous one wrote instead of overwriting them."""
+    eng = VIAEngine(spark, (tmp_path / "uri_store").as_uri())
+    lo = NOW - WINDOW
+    logs = [_envelope(ts, "auth-service", "INFO", f"User login succeeded id={ts}")
+            for ts in range(0, lo, 100)]
+    logs += [_envelope(lo + 50 + i, "payment-service", "FATAL",
+                       f"Quantum fluctuation detected in shard {i}") for i in range(3)]
+    assert eng.ingest_stream(logs)["tier1_ingested"] == len(logs)
+    out = eng.tier1_rhythm_anomalies(window_sec=WINDOW, now=NOW)
+    assert len(out["novel_anomalies"]) == 1
+    assert eng.tier2_clusters(text_filter=None, now=NOW).count() == 1
+
+    eng.control_suppress("hash:a", ttl_sec=600, now=NOW)
+    eng.control_suppress("hash:b", ttl_sec=600, now=NOW)
+    assert {r["rhythm_hash"] for r in eng.control_rules(now=NOW)} == {"hash:a", "hash:b"}
+    assert len(eng.stream_tail(limit=5)) == 5
+
+
 def test_ingest_csv_via_detected_schema(engine, spark, tmp_path):
     """Third onboardable format (beyond-reference): header-mapped CSV
     detected, saved, and executed through the same registry loop."""

@@ -644,10 +644,10 @@ def test_tolerant_windowed_skips_corrupt_day(spark, sf_oracle, tmp_path):
     # tolerant read: only the surviving days' rows, none lost (the
     # operator's exact read shape: static schema so no footer inference,
     # per-read ignoreCorruptFiles skipping the corrupt day at scan time)
-    from via_spark.operators.forensic import TIER2_DAILY_SCHEMA
+    from via_spark.operators.promote import TIER2_SCHEMA
 
     got = (
-        spark.read.schema(TIER2_DAILY_SCHEMA)
+        spark.read.schema(TIER2_SCHEMA)
         .option("ignoreCorruptFiles", "true")
         .parquet(str(dst))
         .where(F.col("start_ts").between(lo, hi))

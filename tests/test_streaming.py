@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from via_spark.operators import promote, rhythm
+from via_spark.session import store_exists, store_has_data
 from via_spark.streaming import pipeline
 
 DETECT_VARIANT = dict(sample_size=200, novelty_min_count=1)
@@ -75,6 +76,73 @@ def test_streaming_detection_promotes_to_tier2(spark, sf_smoke, tmp_path):
     assert row["anomaly_type"] in ("novelty", "frequency")
     # T8 tee sink received the same batch rows
     assert spark.read.parquet(tee).count() == spark.read.parquet(tier1_path).count()
+
+
+def _otel_line(ts: int, service: str, severity: str, body: str) -> str:
+    import json
+
+    return json.dumps({"resourceLogs": [{
+        "resource": {"attributes": [
+            {"key": "service.name", "value": {"stringValue": service}}]},
+        "scopeLogs": [{"logRecords": [{
+            "timeUnixNano": str(ts * 1_000_000_000),
+            "severityText": severity,
+            "body": {"stringValue": body},
+        }]}],
+    }]})
+
+
+def test_api_and_streaming_paths_promote_identically(spark, tmp_path):
+    """One envelope set through both paths — VIAEngine.ingest_stream +
+    tier1_rhythm_anomalies, and read_otel_stream → start_tier1_ingest →
+    one availableNow start_detection trigger — with the same window and
+    detect kwargs yields identical tier1 and tier2 row sets."""
+    import json
+
+    from via_spark.api import VIAEngine
+
+    now, window = 3000, 300
+    lo = now - window
+    lines = [_otel_line(ts, "auth-service", "INFO", f"User login id={ts}")
+             for ts in range(0, now + 1, 10)]
+    lines += [_otel_line(ts, "payment-service", "INFO", f"Payment processed id={ts}")
+              for ts in range(0, lo, 100)]
+    lines += [_otel_line(lo + 3 + 10 * i, "payment-service", "INFO",
+                         f"Payment processed id={i}") for i in range(30)]
+    lines += [_otel_line(lo + 50 + i, "payment-service", "FATAL",
+                         f"Quantum fluctuation detected in shard {i}") for i in range(3)]
+    kwargs = dict(sample_size=1000)
+
+    eng = VIAEngine(spark, str(tmp_path / "engine"))
+    eng.ingest_stream([json.loads(x) for x in lines])
+    eng.tier1_rhythm_anomalies(window_sec=window, now=now, **kwargs)
+
+    src = tmp_path / "otel_jsonl"
+    src.mkdir()
+    (src / "part-0.jsonl").write_text("\n".join(lines) + "\n")
+    tier1, tier2 = str(tmp_path / "tier1"), str(tmp_path / "tier2")
+    pipeline.start_tier1_ingest(
+        pipeline.read_otel_stream(spark, str(src)), tier1,
+        str(tmp_path / "ck_ingest"), available_now=True,
+    ).awaitTermination(120)
+    timings = []
+    pipeline.start_detection(
+        spark, pipeline.read_otel_stream(spark, str(src)), tier1, tier2,
+        str(tmp_path / "ck_detect"), window_sec=window, available_now=True,
+        batch_timings=timings, **kwargs,
+    ).awaitTermination(180)
+    assert len(timings) == 1
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        cols = sorted(df.columns)
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.select(*cols).collect()}
+
+    assert rows(eng.tier1_path) == rows(tier1)
+    got = rows(tier2)
+    assert len(got) == 2  # the planted frequency spike and novelty
+    assert rows(eng.tier2_path) == got
 
 
 def test_windowed_hash_counts_matches_batch(spark, sf_smoke, tmp_path):
@@ -466,12 +534,12 @@ def test_store_exists_resolves_uri_schemes(spark, tmp_path):
     remote stores and silently disables the gate's corpus join) — pin
     plain paths, explicit file: URIs, and the missing-path case."""
     p = tmp_path / "some_store"
-    assert not pipeline._store_exists(spark, str(p))
-    assert not pipeline._store_exists(spark, f"file://{p}")
+    assert not store_exists(spark, str(p))
+    assert not store_exists(spark, f"file://{p}")
     spark.range(3).write.parquet(str(p))
-    assert pipeline._store_exists(spark, str(p))
-    assert pipeline._store_exists(spark, f"file://{p}")
-    assert not pipeline._store_exists(spark, f"file://{p}_nope")
+    assert store_exists(spark, str(p))
+    assert store_exists(spark, f"file://{p}")
+    assert not store_exists(spark, f"file://{p}_nope")
 
 
 def test_store_exists_fs_errors_propagate(tmp_path):
@@ -491,16 +559,16 @@ def test_store_exists_fs_errors_propagate(tmp_path):
         _jsc = _Boom()
 
     with pytest.raises(RuntimeError, match="transient FS failure"):
-        pipeline._store_exists(_BrokenFs(), "s3a://bucket/store")
+        store_exists(_BrokenFs(), "s3a://bucket/store")
 
     class _NoGateway:
         _jvm = None
         _jsc = None
 
     p = tmp_path / "local_store"
-    assert not pipeline._store_exists(_NoGateway(), str(p))
+    assert not store_exists(_NoGateway(), str(p))
     p.mkdir()
-    assert pipeline._store_exists(_NoGateway(), str(p))
+    assert store_exists(_NoGateway(), str(p))
 
 
 def test_streaming_decay_partials_match_batch(spark, sf_smoke, tmp_path):
@@ -1075,22 +1143,22 @@ def test_store_has_data_sees_through_metadata_shell(spark, tmp_path):
     reader must treat that shell (and a batch write's _temporary tree)
     as not-yet-written, while one committed data file flips it."""
     store = tmp_path / "store"
-    assert pipeline._store_has_data(spark, str(store)) is False  # absent
+    assert store_has_data(spark, str(store)) is False  # absent
     (store / "_spark_metadata").mkdir(parents=True)
     (store / "_spark_metadata" / "0").write_text("{}")
     (store / "_temporary" / "0").mkdir(parents=True)
     (store / "_temporary" / "0" / "part-000.parquet").write_text("x")
-    assert pipeline._store_has_data(spark, str(store)) is False  # shell only
+    assert store_has_data(spark, str(store)) is False  # shell only
     part = store / "event_date=2026-01-01"
     part.mkdir()
     (part / "part-000.parquet").write_text("x")
-    assert pipeline._store_has_data(spark, str(store)) is True
+    assert store_has_data(spark, str(store)) is True
     # local fallback path (no JVM gateway) agrees
     class _NoJvm:
         _jvm = None
         _jsc = None
-    assert pipeline._store_has_data(_NoJvm(), str(store)) is True
-    assert pipeline._store_has_data(_NoJvm(), str(tmp_path / "nope")) is False
+    assert store_has_data(_NoJvm(), str(store)) is True
+    assert store_has_data(_NoJvm(), str(tmp_path / "nope")) is False
 
 
 def test_streaming_hll_store_matches_batch_sketch(spark, sf_smoke, tmp_path):

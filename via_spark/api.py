@@ -8,12 +8,18 @@ schemas detect/save/list/get) drives this class instead of HTTP routes
 No web framework: the engine is a library; any HTTP layer is a thin
 shim over these methods.
 
-State model: one base directory holds the four stores —
-``tier1/`` and ``tier2/`` (date-partitioned parquet), ``rules/`` and
-``schemas/`` (small parquet tables), ``evals/`` (YAML regression
-cases). ``now`` is an explicit parameter on every time-dependent verb
+State model: one base directory — a local path or any Hadoop-FS URI
+(``file:``, ``hdfs:``, ``s3a:``) — holds ``tier1/`` and ``tier2/``
+(date-partitioned parquet), ``rules/`` and ``schemas/`` (small parquet
+tables), and ``evals/`` (YAML regression cases, local paths only).
+``now`` is an explicit parameter on every time-dependent verb
 (SURVEY.md §7.4 decision 2); omit it and the engine derives it from the
 newest stored event, never the wall clock.
+
+The streaming pipeline shares this engine's tier1 row derivation
+(``rhythm.tier1_from_flat``), its detect → promote step
+(``promote.detect_and_promote``) and its store-existence checks
+(``session.store_exists`` / ``store_has_data``).
 """
 
 from __future__ import annotations
@@ -24,9 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import control, forensic, promote, rhythm, schema_infer
-from via_spark.session import configure
+from via_spark.session import configure, store_exists, store_has_data
 
 
 class VIAEngine:
@@ -40,7 +45,6 @@ class VIAEngine:
         self.rules_path = os.path.join(base_dir, "rules")
         self.registry_path = os.path.join(base_dir, "schemas")
         self.evals_dir = os.path.join(base_dir, "evals")
-        os.makedirs(base_dir, exist_ok=True)
 
     # -- ingestion & streaming ------------------------------------------------
 
@@ -69,14 +73,7 @@ class VIAEngine:
         template + sha256 pipeline executes ONCE, not once per count."""
         from pyspark.sql import Observation
 
-        tier1 = (
-            flat.withColumn(
-                "event_id", F.abs(F.xxhash64("service", "severity", "body", "ts"))
-            )
-            .withColumn("template", template(F.col("body")))
-            .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
-            .withColumn("event_date", promote.event_date(F.col("ts")))
-        )
+        tier1 = rhythm.tier1_from_flat(flat)
         obs = Observation()
         (
             tier1.observe(obs, F.count(F.lit(1)).alias("n"))
@@ -102,34 +99,20 @@ class VIAEngine:
     def tier1_rhythm_anomalies(self, window_sec: int = 300, now: int | None = None,
                                **detect_kwargs) -> dict:
         """POST /analysis/tier1/rhythm_anomalies — detect AND promote
-        (the reference promotes within the same call, T7)."""
+        (the reference promotes within the same call, T7) through
+        ``promote.detect_and_promote``, the step each streaming
+        detection trigger runs too."""
         t1 = self._tier1()
-        if now is None:
+        if now is None:  # newest stored event; None on an empty store
             now = t1.agg(F.max("ts")).collect()[0][0]
-        if now is None:  # empty store → nothing to analyze
-            return {"novel_anomalies": [], "frequency_anomalies": []}
-        out, anomalies = self._detect(t1, window_sec, now, **detect_kwargs)
-        if out:
-            # the anomaly rows are already on the driver — rebuild the
-            # (tiny) frame from them instead of re-running detection
-            # inside the rollup plan
-            anomalies = self.spark.createDataFrame(out, anomalies.schema)
-            recent = rhythm.recent_window(t1, now, window_sec)
-            clusters = promote.rollup_clusters(anomalies, recent)
-            promote.write_tier2(clusters, self.tier2_path)
+        out = promote.detect_and_promote(
+            self.spark, t1, self.tier2_path, self.rules_path, now, window_sec,
+            **detect_kwargs,
+        )
         return {
             "novel_anomalies": [a for a in out if a["anomaly_type"] == "novelty"],
             "frequency_anomalies": [a for a in out if a["anomaly_type"] == "frequency"],
         }
-
-    def _detect(self, t1: DataFrame, window_sec: int, now: int,
-                **detect_kwargs) -> tuple[list[dict], DataFrame]:
-        rules = control.active_rules(self._rules(), now)
-        anomalies = rhythm.find_rhythm_anomalies(
-            self.spark, sf_dir="", tier1=t1, now=now, window_sec=window_sec,
-            rules=rules, **detect_kwargs,
-        )
-        return [r.asDict() for r in anomalies.collect()], anomalies
 
     def run_evals(self, window_sec: int = 300, now: int | None = None,
                   **detect_kwargs) -> list[dict]:
@@ -145,11 +128,13 @@ class VIAEngine:
         t1 = self._tier1()
         if now is None:
             now = t1.agg(F.max("ts")).collect()[0][0]
-        if now is None:  # empty store → no detections, cases still judged
-            out = []
-        else:
-            out, _ = self._detect(t1, window_sec, now, **detect_kwargs)
-        flagged = {a["rhythm_hash"] for a in out}
+        flagged = set()
+        if now is not None:  # empty store → no detections, cases still judged
+            anomalies = rhythm.find_rhythm_anomalies(
+                self.spark, sf_dir="", tier1=t1, now=now, window_sec=window_sec,
+                rules=control.active_rules(self._rules(), now), **detect_kwargs,
+            )
+            flagged = {r["rhythm_hash"] for r in anomalies.collect()}
         results = []
         for path in sorted(glob.glob(os.path.join(self.evals_dir, "*.yml"))):
             case = control.read_eval_case(path)
@@ -238,40 +223,25 @@ class VIAEngine:
 
     # -- internals ------------------------------------------------------------
 
-    _TIER1_SCHEMA = (
-        "service string, severity string, body string, ts long, "
-        "event_id long, template string, rhythm_hash string, event_date date"
-    )
-    _TIER2_SCHEMA = (
-        "entity_type string, rhythm_hash string, start_ts long, end_ts long, "
-        "count long, service string, severity string, anomaly_type string, "
-        "anomaly_context string, body string, sample_logs array<string>, "
-        "event_date date"
-    )
-
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        """Missing store → typed empty frame (a fresh engine answers
-        every read endpoint with empty results, like the reference's
-        empty collections). ONLY the path-missing case is absorbed —
-        any other read failure propagates, so a transient error can
-        never masquerade as an empty table (and, via the next write,
-        silently wipe it)."""
-        import os
-
-        if not os.path.exists(path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+    # A store with no data yet reads as a typed empty frame (a fresh
+    # engine answers every read endpoint with empty results, like the
+    # reference's empty collections). ONLY the not-yet-written case is
+    # absorbed — any other read failure propagates, so a transient error
+    # can never masquerade as an empty table (and, via the next write,
+    # silently wipe it).
 
     def _tier1(self) -> DataFrame:
-        return self._read_or_empty(self.tier1_path, self._TIER1_SCHEMA)
+        if not store_has_data(self.spark, self.tier1_path):
+            return self.spark.createDataFrame([], rhythm.TIER1_SCHEMA)
+        return self.spark.read.parquet(self.tier1_path)
 
     def _tier2(self, start_ts: int | None = None, end_ts: int | None = None) -> DataFrame:
-        if not os.path.exists(self.tier2_path):
-            return self.spark.createDataFrame([], self._TIER2_SCHEMA)
+        if not store_has_data(self.spark, self.tier2_path):
+            return self.spark.createDataFrame([], promote.TIER2_SCHEMA)
         return promote.read_tier2(self.spark, self.tier2_path, start_ts, end_ts)
 
     def _rules(self) -> DataFrame:
-        if not os.path.exists(self.rules_path):
+        if not store_exists(self.spark, self.rules_path):
             return control.empty_rules(self.spark)
         return self.spark.read.parquet(self.rules_path)
 

@@ -98,6 +98,40 @@ def _query_vector(spark: SparkSession, text: str) -> DataFrame:
     return rows
 
 
+def _cosine_scored(
+    cand: DataFrame,
+    rows: DataFrame,
+    norms: DataFrame,
+    qrows: DataFrame,
+    score_col: str = "score",
+) -> DataFrame:
+    """``cand`` plus the cosine of each candidate's sparse embedding
+    (``rows``/``norms`` from :func:`_embedded`) against the query vector
+    ``qrows`` (dim, qw). Dots ride the inverted (dim, w) join and the
+    query norm is one broadcast row; a candidate sharing no dimension
+    with the query scores 0.0."""
+    qn2 = qrows.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
+    dots = (
+        rows.join(qrows, "dim")
+        .groupBy("rhythm_hash")
+        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
+    )
+    return (
+        cand.join(dots, "rhythm_hash", "left")
+        .join(norms, "rhythm_hash")
+        .crossJoin(F.broadcast(qn2))
+        .withColumn(
+            score_col,
+            F.when(
+                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
+            ).otherwise(
+                F.col("dot").cast("double")
+                / (F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("qn2").cast("double")))
+            ),
+        )
+    )
+
+
 def cluster_search_over(
     spark: SparkSession,
     c: DataFrame,
@@ -140,28 +174,7 @@ def cluster_search_over(
     c = _canonical_per_hash(c)
 
     rows, norms = _embedded(c)
-    qrows = _query_vector(spark, text_filter)
-    qn2 = qrows.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
-
-    dots = (
-        rows.join(qrows, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    scored = (
-        c.join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("qn2").cast("double")))
-            ),
-        )
-    )
+    scored = _cosine_scored(c, rows, norms, _query_vector(spark, text_filter))
     # V2/W1: one hit per rhythm_hash — guaranteed by the upfront
     # _canonical_per_hash dedup, so no second per-group window is needed
     return (
@@ -249,27 +262,10 @@ def _triage_core(
             - F.lit(n_pos) * F.sum(F.when(~F.col("is_pos"), F.col("w")).otherwise(0))
         ).alias("qw")
     ).where(F.col("qw") != 0)
-    qn2 = qd.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
 
     cand = c.join(F.broadcast(marked.select("rhythm_hash")), "rhythm_hash", "left_anti")
-    dots = (
-        rows.join(qd, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
     return (
-        cand.join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("qn2").cast("double")))
-            ),
-        )
+        _cosine_scored(cand, rows, norms, qd)
         .select(
             F.col("rhythm_hash").alias("cluster_id"),
             F.col("count").alias("incident_count"),
@@ -337,16 +333,6 @@ def clusters_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HYBRID_CUT_N = 100
 
-# tier2 daily store shape — pinned by the writer (promote.rollup_clusters
-# + write_tier2 partitionBy event_date); the tolerant reader supplies it
-# so no footer inference runs (see clusters_windowed_tolerant docstring)
-TIER2_DAILY_SCHEMA = (
-    "entity_type string, rhythm_hash string, start_ts bigint, "
-    "end_ts bigint, count bigint, service string, severity string, "
-    "anomaly_type string, anomaly_context string, body string, "
-    "sample_logs array<string>, event_date date"
-)
-
 
 def hybrid_tier2_search(
     spark: SparkSession,
@@ -389,30 +375,9 @@ def hybrid_tier2_search(
 
     # dense leg — hashing-trick cosine against the query text
     rows, norms = _embedded(c)
-    qrows = _query_vector(spark, text)
-    qn2 = qrows.agg(F.sum(F.col("qw") * F.col("qw")).alias("qn2"))
-    dots = (
-        rows.join(qrows, "dim")
-        .groupBy("rhythm_hash")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    dense = (
-        c.select("rhythm_hash")
-        .join(dots, "rhythm_hash", "left")
-        .join(norms, "rhythm_hash")
-        .crossJoin(F.broadcast(qn2))
-        .withColumn(
-            "dense_score",
-            F.when(
-                F.coalesce(F.col("dot"), F.lit(0)) == 0, F.lit(0.0)
-            ).otherwise(
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("n2").cast("double"))
-                    * F.sqrt(F.col("qn2").cast("double"))
-                )
-            ),
-        )
+    dense = _cosine_scored(
+        c.select("rhythm_hash"), rows, norms, _query_vector(spark, text),
+        "dense_score",
     )
 
     # sparse leg — BM25 over the cluster bodies
@@ -499,7 +464,7 @@ def clusters_windowed_tolerant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same window predicates as promote.read_tier2 (the canonical
     # definition), applied over the tolerant read
     df = (
-        spark.read.schema(TIER2_DAILY_SCHEMA)
+        spark.read.schema(promote.TIER2_SCHEMA)
         .option("ignoreCorruptFiles", "true")
         .parquet(path)
         .where(

@@ -49,13 +49,26 @@ def event_date(ts_sec: Column) -> Column:
     return F.date_add(F.lit("1970-01-01").cast("date"), (ts_sec / 86400).cast("int"))
 
 
-def _serialize_log(df: DataFrame) -> Column:
-    """The engine's ``full_log_json`` analog for fixture rows (F9)."""
-    return F.to_json(
+def _sample_logs(member: DataFrame) -> Column:
+    """Aggregate: the first ``SAMPLE_LOGS_MAX`` member logs of a group in
+    the pinned (ts, event_id) order, each serialized as the engine's
+    ``full_log_json`` analog (F9)."""
+    log_json = F.to_json(
         F.struct(
-            df["event_id"], df["ts"], df["service"], df["severity"], df["body"]
+            member["event_id"], member["ts"], member["service"],
+            member["severity"], member["body"],
         )
     )
+    first = F.slice(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.col("ts"), F.col("event_id"), log_json.alias("log_json"))
+            )
+        ),
+        1,
+        SAMPLE_LOGS_MAX,
+    )
+    return F.transform(first, lambda s: s["log_json"]).alias("sample_logs")
 
 
 def rollup_clusters(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
@@ -73,22 +86,7 @@ def rollup_clusters(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
         F.min("ts").alias("start_ts"),
         F.max("ts").alias("end_ts"),
         F.count(F.lit(1)).alias("n_logs"),
-        F.transform(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("ts"),
-                            F.col("event_id"),
-                            _serialize_log(member).alias("log_json"),
-                        )
-                    )
-                ),
-                1,
-                SAMPLE_LOGS_MAX,
-            ),
-            lambda s: s["log_json"],
-        ).alias("sample_logs"),
+        _sample_logs(member),
     )
     return (
         anomalies.select(
@@ -178,22 +176,7 @@ def daily_rollup(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
         F.min("ts").alias("start_ts"),
         F.max("ts").alias("end_ts"),
         F.count(F.lit(1)).alias("n_logs"),
-        F.transform(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("ts"),
-                            F.col("event_id"),
-                            _serialize_log(member).alias("log_json"),
-                        )
-                    )
-                ),
-                1,
-                SAMPLE_LOGS_MAX,
-            ),
-            lambda s: s["log_json"],
-        ).alias("sample_logs"),
+        _sample_logs(member),
     )
     return (
         rep.join(agg, ["rhythm_hash", "event_date"])
@@ -218,6 +201,62 @@ def daily_rollup(anomalies: DataFrame, logs: DataFrame) -> DataFrame:
             "event_date",
         )
     )
+
+
+def detect_and_promote(
+    spark: SparkSession,
+    tier1: DataFrame,
+    tier2_path: str,
+    rules_path: str | None,
+    now: int | None,
+    window_sec: int,
+    **detect_kwargs,
+) -> list[dict]:
+    """The one detect → rollup (A3) → tier2 append step, shared by
+    ``VIAEngine.tier1_rhythm_anomalies`` and the streaming detection
+    trigger (``pipeline.start_detection``).
+
+    Reads the rules active at ``now`` from ``rules_path`` (absent →
+    none), runs the detection plan ONCE and collects its rows, then
+    rolls up and appends only when something was found. The (tiny)
+    anomalies frame stays cached for the step, so the rollup reuses the
+    collected result, and its real size lets both rollup joins
+    broadcast it (``createDataFrame`` over the rows would go through a
+    Python-worker RDD of unknown size, whose time varies per trigger).
+    ``now`` None (an empty store) means nothing to do. Returns the
+    anomaly rows as dicts.
+    """
+    from via_spark.operators import control
+    from via_spark.session import store_exists
+
+    if now is None:
+        return []
+    rules = None
+    if rules_path is not None and store_exists(spark, rules_path):
+        rules = control.active_rules(spark.read.parquet(rules_path), now)
+    anomalies = rhythm.find_rhythm_anomalies(
+        spark, sf_dir="", tier1=tier1, now=now, window_sec=window_sec,
+        rules=rules, **detect_kwargs,
+    )
+    anomalies = anomalies.cache()
+    try:
+        rows = anomalies.collect()
+        if rows:
+            recent = rhythm.recent_window(tier1, now, window_sec)
+            write_tier2(rollup_clusters(anomalies, recent), tier2_path)
+    finally:
+        anomalies.unpersist(blocking=True)
+    return [r.asDict() for r in rows]
+
+
+# tier2 row shape, as rollup_clusters / daily_rollup produce it and
+# write_tier2 stores it (event_date is the partition column)
+TIER2_SCHEMA = (
+    "entity_type string, rhythm_hash string, start_ts bigint, "
+    "end_ts bigint, count bigint, service string, severity string, "
+    "anomaly_type string, anomaly_context string, body string, "
+    "sample_logs array<string>, event_date date"
+)
 
 
 def write_tier2(clusters: DataFrame, path: str, mode: str = "append") -> None:

@@ -104,6 +104,30 @@ def tier1_from_events(
     )
 
 
+TIER1_SCHEMA = (
+    "service string, severity string, body string, ts long, "
+    "event_id long, template string, rhythm_hash string, event_date date"
+)
+
+
+def tier1_from_flat(flat: DataFrame) -> DataFrame:
+    """The stored tier1 row over flattened logs (service, severity,
+    body, ts) — batch or streaming, one derivation (``TIER1_SCHEMA``).
+
+    ``event_id`` is a content-derived surrogate (log envelopes carry no
+    row id): deterministic across replays, used only as a tiebreak.
+    ``event_date`` is the partition key tier1 shares with tier2.
+    """
+    from via_spark.operators.promote import event_date
+
+    return (
+        flat.withColumn("event_id", F.abs(F.xxhash64("service", "severity", "body", "ts")))
+        .withColumn("template", template(F.col("body")))
+        .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
+        .withColumn("event_date", event_date(F.col("ts")))
+    )
+
+
 def current_now(tier1: DataFrame) -> int:
     """Deterministic 'now': the newest ts in the store.
 

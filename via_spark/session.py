@@ -105,6 +105,71 @@ def get_spark(app_name: str = "via_spark", master: str | None = None) -> SparkSe
     return configure(builder.getOrCreate())
 
 
+def store_exists(spark: SparkSession, path: str) -> bool:
+    """Does a parquet store exist yet at ``path`` — on ANY Hadoop
+    filesystem (local, HDFS, S3A), not just the local one?
+
+    Readers use this to absorb exactly the store-not-yet-written case;
+    ``os.path`` would answer false forever on a remote or ``file:`` URI
+    and silently treat the store as empty. Resolves through the Hadoop
+    FileSystem of the path's own scheme, so ``file:``, ``hdfs:``, and
+    ``s3a:`` stores all answer correctly.
+
+    The local-path fallback covers ONLY the no-JVM-gateway case (a
+    mocked/stopped session, detected before any FS call). A transient
+    remote-FS failure (S3 auth lapse, network) must PROPAGATE: swallowing
+    it would return False and silently skip the corpus join or the
+    suppression rules — a streaming batch fails and is retried instead.
+    """
+    if getattr(spark, "_jvm", None) is None or getattr(spark, "_jsc", None) is None:
+        # No JVM gateway (mocked session) — local check is all there is.
+        return os.path.isdir(path)
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(jpath))
+
+
+def store_has_data(spark: SparkSession, path: str) -> bool:
+    """Does the store at ``path`` contain at least one COMMITTED data
+    file — not just the directory the streaming file sink creates
+    eagerly with ``_spark_metadata`` before any batch commits, and not
+    a batch write's in-flight ``_temporary`` tree or an empty write's
+    lone ``_SUCCESS`` marker?
+
+    Reading such a dataless directory fails parquet schema inference,
+    so a reader of a store another query (or an empty write) produced
+    gates on this rather than :func:`store_exists`. A file counts as
+    data iff no path component under the store starts with ``_`` or
+    ``.`` (``_spark_metadata/0``, ``_temporary/...``, dotfiles are
+    metadata). Transient FS errors still PROPAGATE (same contract as
+    :func:`store_exists`)."""
+    if getattr(spark, "_jvm", None) is None or getattr(spark, "_jsc", None) is None:
+        if not os.path.isdir(path):
+            return False
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if any(not f.startswith(("_", ".")) for f in files):
+                return True
+        return False
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return False
+    base = fs.makeQualified(jpath).toUri().getPath()
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        rel = st.getPath().toUri().getPath()
+        if rel.startswith(base):
+            rel = rel[len(base):].lstrip("/")
+        parts = rel.split("/")
+        if parts and not any(c.startswith(("_", ".")) for c in parts):
+            return True
+    return False
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table; runtime confs applied first.
 

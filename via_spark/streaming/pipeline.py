@@ -15,7 +15,8 @@ Capability parity (semantics, not code) with the reference:
   improvement.
 * T7 stream→batch promotion — anomalies detected in a trigger are
   rolled up (A3) and appended to the date-partitioned tier2 store
-  within the same ``foreachBatch``.
+  within the same ``foreachBatch``, by ``promote.detect_and_promote``
+  (the step the batch API runs too).
 * T8 dual-sink tee       — one batch written to two sinks inside a
   single ``foreachBatch`` (the streamer's JSONL + API tee).
 
@@ -36,103 +37,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from via_spark.functions.text import rhythm_hash, template
 from via_spark.operators import promote, rhythm
 from via_spark.operators.schema_infer import otel_flatten
+from via_spark.session import store_exists, store_has_data
 
 INGEST_TRIGGER = "0.5 seconds"   # T1
 ANALYSIS_TRIGGER = "60 seconds"  # T2
 WATERMARK = "120 seconds"        # T4 (improvement over reference)
 
 
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    """Does a parquet store exist yet at ``path`` — on ANY Hadoop
-    filesystem (local, HDFS, S3A), not just the local one?
-
-    foreachBatch bodies use this to absorb exactly the
-    store-not-yet-written case; ``os.path`` would answer false forever
-    on a remote ``store_dir`` and silently skip corpus joins. Resolves
-    through the Hadoop FileSystem of the path's own scheme, so
-    ``file:``, ``hdfs:``, and ``s3a:`` stores all answer correctly.
-
-    The local-path fallback covers ONLY the no-JVM-gateway case (a
-    mocked/stopped session, detected before any FS call). A transient
-    remote-FS failure (S3 auth lapse, network) must PROPAGATE and fail
-    the batch: swallowing it would return False, silently skip the
-    corpus join and the suppression rules, and emit a wrong batch —
-    the exactly-once replay contract turns that into a retry instead.
-    """
-    if getattr(spark, "_jvm", None) is None or getattr(spark, "_jsc", None) is None:
-        # No JVM gateway (mocked session) — local check is all there is.
-        import os
-
-        return os.path.isdir(path)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _store_has_data(spark: SparkSession, path: str) -> bool:
-    """Does the store at ``path`` contain at least one COMMITTED data
-    file — not just the directory the streaming file sink creates
-    eagerly with ``_spark_metadata`` before any batch commits, and not
-    a batch write's in-flight ``_temporary`` tree?
-
-    The round-9 streaming soak caught the race ``_store_exists`` can't
-    see: a detection trigger fired between sink start and first commit,
-    ``spark.read.parquet`` found an existing-but-dataless directory and
-    failed schema inference, poisoning the batch. A file counts as data
-    iff no path component under the store starts with ``_`` or ``.``
-    (``_spark_metadata/0``, ``_temporary/...``, dotfiles are metadata).
-    Transient FS errors still PROPAGATE (same contract as
-    ``_store_exists``)."""
-    if getattr(spark, "_jvm", None) is None or getattr(spark, "_jsc", None) is None:
-        import os
-
-        if not os.path.isdir(path):
-            return False
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(not f.startswith(("_", ".")) for f in files):
-                return True
-        return False
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    base = fs.makeQualified(jpath).toUri().getPath()
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        rel = st.getPath().toUri().getPath()
-        if rel.startswith(base):
-            rel = rel[len(base):].lstrip("/")
-        parts = rel.split("/")
-        if parts and not any(c.startswith(("_", ".")) for c in parts):
-            return True
-    return False
-
-
 def read_otel_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """S1 streaming flavor: OTel-JSONL files → flattened tier1 columns.
-
-    ``event_id`` is a content-derived surrogate (the OTel envelope has
-    no row id): deterministic across replays, used only as a tiebreak.
+    """S1 streaming flavor: OTel-JSONL files → tier1 rows, through the
+    same derivation as ``VIAEngine.ingest_stream`` (``rhythm.tier1_from_flat``).
     """
     reader = spark.readStream.format("text")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.load(input_dir)
-    flat = otel_flatten(raw, raw_col="value")
-    return (
-        flat.withColumn("event_id", F.abs(F.xxhash64("service", "severity", "body", "ts")))
-        .withColumn("template", template(F.col("body")))
-        .withColumn("rhythm_hash", rhythm_hash("service", "severity", F.col("template")))
-        .withColumn("event_date", promote.event_date(F.col("ts")))
-    )
+    return rhythm.tier1_from_flat(otel_flatten(raw, raw_col="value"))
 
 
 def start_tier1_ingest(stream: DataFrame, tier1_path: str, checkpoint: str,
@@ -205,8 +128,11 @@ def start_detection(
     """T7: per-trigger detect → rollup (A3) → tier2 append.
 
     Each trigger re-reads the accumulated tier1 store (stream-static
-    pattern, T3) with ``now`` = newest stored ts — identical semantics
-    to the reference's worker pass, minus the wall clock. ``tee_path``
+    pattern, T3) with ``now`` = newest stored ts and runs
+    ``promote.detect_and_promote`` — the SAME step
+    ``VIAEngine.tier1_rhythm_anomalies`` runs, so a trigger and an API
+    call over one store promote identical tier2 rows (the reference's
+    worker pass, minus the wall clock). ``tee_path``
     demonstrates T8 (same batch, second sink). ``rules_path`` is the
     suppression/patch table, RE-READ every trigger (T6: an operator
     suppressing a hash mid-stream takes effect at the next batch — the
@@ -238,28 +164,16 @@ def start_detection(
         # failure must propagate (fail the batch, retried by the
         # engine) — absorbing it would silently run detection without
         # the store, or worse, without the suppression rules.
-        # _store_has_data (not _store_exists): the ingest QUERY creates
+        # store_has_data (not store_exists): the ingest QUERY creates
         # the directory + _spark_metadata before committing any data
         # file, and reading that shell fails schema inference
-        if not _store_has_data(spark, tier1_path):
+        if not store_has_data(spark, tier1_path):
             return  # ingest has not committed any files yet
         tier1 = spark.read.parquet(tier1_path)
-        if not tier1.take(1):
-            return
         now = tier1.agg(F.max("ts")).collect()[0][0]
-        rules = None
-        if rules_path is not None and _store_exists(spark, rules_path):
-            from via_spark.operators import control
-
-            rules = control.active_rules(spark.read.parquet(rules_path), now)
-        anomalies = rhythm.find_rhythm_anomalies(
-            spark, sf_dir="", tier1=tier1, now=now, window_sec=window_sec,
-            rules=rules, **detect_kwargs
+        promote.detect_and_promote(
+            spark, tier1, tier2_path, rules_path, now, window_sec, **detect_kwargs
         )
-        recent = rhythm.recent_window(tier1, now, window_sec)
-        clusters = promote.rollup_clusters(anomalies, recent)
-        if clusters.take(1):
-            promote.write_tier2(clusters, tier2_path)
         if batch_timings is not None:
             batch_timings.append(
                 {
@@ -381,10 +295,10 @@ def start_rollup_maintenance(
             r["event_date"]
             for r in batch_df.select("event_date").distinct().collect()
         ]
-        # _store_has_data: tier1 is written by a DIFFERENT query — its
+        # store_has_data: tier1 is written by a DIFFERENT query — its
         # directory can exist dataless between sink start and first
         # commit (see start_detection's guard)
-        if not touched or not _store_has_data(spark, tier1_path):
+        if not touched or not store_has_data(spark, tier1_path):
             return
         tier1 = spark.read.parquet(tier1_path)
         recomputed = (
@@ -538,7 +452,7 @@ def neardup_gate_process_batch(
 
     # 1) batch vs stored corpus (excluding this batch's own partition)
     cands = []
-    if _store_exists(spark, f"{store_dir}/bands"):
+    if store_exists(spark, f"{store_dir}/bands"):
         not_self = F.col("batch_id") != batch_id
         corpus_bands = (
             spark.read.parquet(f"{store_dir}/bands")
@@ -710,7 +624,7 @@ def embedding_gate_process_batch(
 
     corpus = None
     n_corpus = 0
-    if _store_exists(spark, f"{store_dir}/sigs"):
+    if store_exists(spark, f"{store_dir}/sigs"):
         corpus = spark.read.parquet(f"{store_dir}/sigs").where(
             F.col("batch_id") != batch_id
         )
